@@ -97,10 +97,13 @@ object Dedup {
   }
 
   /** Exact dedup: canonical content hash + deterministic survivor (min id).
-    * Returns (content_hash, survivor_id, n_dups). */
+    * Returns (content_hash, survivor_id, n_dups). Lowercases with the JVM
+    * case mapping ([[graft.plans.JvmLower]]), which skips the ICU start-up
+    * cost of `lower` on a cold JVM. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
-      .withColumn("content_hash", md5(trim(lower(col(textCol)))))
+      .withColumn("content_hash",
+        md5(trim(graft.plans.TextExpressions.jvmLower(col(textCol)))))
       .groupBy(col("content_hash"))
       .agg(min(col(idCol)).as("survivor_id"), count(lit(1)).as("n_dups"))
 

@@ -247,6 +247,35 @@ case class WinnowFingerprints(child: Expression, window: Int)
   override def prettyName: String = "winnow_fingerprints"
 }
 
+/** Lowercasing with the JVM's case mapping (`UTF8String.toLowerCase`,
+  * which `lower` runs when ICU case mappings are off). Spark 4's `lower`
+  * takes the ICU path by default, and its first call in a JVM runs a static
+  * initializer that puts every code point through ICU title-casing — about
+  * 2 s of task time before the first row. The JVM mapping has no such
+  * start-up cost and agrees with ICU outside a few context-dependent
+  * mappings (e.g. a word-final capital sigma). Null in, null out. */
+case class JvmLower(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = StringType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"jvm_lower requires a string argument, got ${other.sql}")
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    input.asInstanceOf[UTF8String].toLowerCase
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"($c).toLowerCase()")
+
+  override protected def withNewChildInternal(newChild: Expression): JvmLower =
+    copy(child = newChild)
+
+  override def prettyName: String = "jvm_lower"
+}
+
 /** Native NFKC normalization — the missing half of a unicode-aware
   * tokenizer (Spark ships no normalizer function; concat of compatibility
   * variants like full-width ＡＢＣ, ligature ﬁ, or superscript ² would
@@ -518,6 +547,10 @@ object TextExpressions {
   def winnowFingerprints(shingles: Column, window: Int): Column =
     ColumnBridge.column(
       WinnowFingerprints(ColumnBridge.expression(shingles), window))
+
+  /** Column API for lowercasing with the JVM case mapping. */
+  def jvmLower(text: Column): Column =
+    ColumnBridge.column(JvmLower(ColumnBridge.expression(text)))
 
   /** Column API for native NFKC normalization (ASCII passes through). */
   def nfkcNormalize(text: Column): Column =

@@ -109,21 +109,30 @@ object HttpPostAction {
     def post(url: String, body: String, timeoutMs: Long): (Int, String)
   }
 
-  /** JDK HttpClient transport (no extra deps). */
+  /** JDK HttpClient transport (no extra deps). One client per connect
+    * timeout is built lazily and reused for the life of the JVM: every
+    * client owns a selector thread and a worker pool, so a client per POST
+    * starts threads on every delivery. */
   object javaHttpPoster extends Poster {
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    import java.time.Duration
+
+    private val clients = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, HttpClient]()
+
+    private def client(connectTimeoutMs: Long): HttpClient =
+      clients.computeIfAbsent(connectTimeoutMs, ms =>
+        HttpClient.newBuilder().connectTimeout(Duration.ofMillis(ms)).build())
+
     override def post(url: String, body: String, timeoutMs: Long): (Int, String) = {
-      import java.net.http.{HttpClient, HttpRequest, HttpResponse}
       import java.net.URI
-      import java.time.Duration
-      val client = HttpClient.newBuilder()
-        .connectTimeout(Duration.ofMillis(math.min(timeoutMs, 60000))).build()
+      val http = client(math.min(timeoutMs, 60000))
       val req = HttpRequest.newBuilder(URI.create(url))
         .timeout(Duration.ofMillis(timeoutMs))
         .header("Content-Type", "application/json")
         .POST(HttpRequest.BodyPublishers.ofString(body))
         .build()
       try {
-        val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+        val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
         (resp.statusCode(), Option(resp.body()).getOrElse(""))
       } catch {
         case e: java.net.http.HttpTimeoutException => (408, s"timeout: ${e.getMessage}")

@@ -21,8 +21,8 @@ class DeliveryPipelineSpec extends SparkSpec {
     }
   }
 
-  private def pipeline(sink: DataSyncAction) = {
-    val dir = Files.createTempDirectory("dp").toString
+  private def pipeline(sink: DataSyncAction,
+                       dir: String = Files.createTempDirectory("dp").toString) = {
     val client = new KVStore(spark, s"$dir/allowed")
     client.save("demo", "id,version,name", ts(1))
     val err = new KVStore(spark, s"$dir/err")
@@ -80,5 +80,27 @@ class DeliveryPipelineSpec extends SparkSpec {
     p.deliver(changes, ts(20))
     assert(sink.received(1)._1 == Seq("id", "version"),
       "next batch re-resolves the allowlist (never cached)")
+  }
+
+  test("allowlist edits, by this store or another instance on its path, reach the next delivery") {
+    val sink = new ScriptedSink(SinkOutcome(success = true, 200, retryable = false, ""))
+    val dir = Files.createTempDirectory("dp").toString
+    val (p, _, _, client) = pipeline(sink, dir)
+    val other = new KVStore(spark, s"$dir/allowed")
+    p.deliver(changes, ts(10))
+    client.save("demo", "name", ts(15))
+    p.deliver(changes, ts(20))
+    other.save("demo", "secret", ts(25))
+    p.deliver(changes, ts(30))
+    client.save("demo", "name,secret", ts(35))
+    p.deliver(changes, ts(40))
+    other.delete("nothing") // a fold by the other instance keeps the value
+    p.deliver(changes, ts(50))
+    assert(sink.received.map(_._1) == Seq(
+      Seq("id", "version", "name"),
+      Seq("id", "name"),
+      Seq("id", "secret"),
+      Seq("id", "name", "secret"),
+      Seq("id", "name", "secret")))
   }
 }

@@ -143,3 +143,22 @@ class JaroWinklerSpec extends SparkSpec {
     }
   }
 }
+
+/** JvmLower must agree with the built-in `lower` on the text it sees. */
+class JvmLowerSpec extends SparkSpec {
+
+  test("equals lower on ASCII and on a non-ASCII sample; null stays null") {
+    import spark.implicits._
+    val texts = Seq("Hello World", "  MiXeD case 42 ", "", "ALL-CAPS_AND.PUNCT!",
+      "Ärger Über ÖL", "STRASSE Straße", "ΑΘΗΝΑ σοφία", "ПРИВЕТ Мир", "ÇAĞ", "ǅemal", "Ⅻ Ｆｕｌｌ")
+    val df = (texts.map(Option(_)) :+ None).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+      .repartition(2) // a non-local plan, so the codegen'd projection runs
+    val got = df.select(col("id"), TextExpressions.jvmLower(col("text")))
+      .as[(Long, Option[String])].collect().toMap
+    val want = df.select(col("id"), lower(col("text")))
+      .as[(Long, Option[String])].collect().toMap
+    assert(got == want)
+    assert(got(texts.length.toLong).isEmpty)
+  }
+}
